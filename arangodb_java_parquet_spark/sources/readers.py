@@ -115,11 +115,26 @@ def read_jdbc(spark: SparkSession, url: str, table: str, *,
 def read_collection(spark: SparkSession, collection: LocalCollection, *,
                     schema=None) -> DataFrame:
     """Read a LocalCollection back as a DataFrame (schema-on-read over the
-    JSONL part files — the document store's dynamic-schema model)."""
-    reader = spark.read
+    JSONL part files — the document store's dynamic-schema model).
+
+    The read is rooted at the collection directory and picks part files
+    with ``pathGlobFilter``, so Spark lists the collection with ONE call on
+    the driver and starts no listing job, whatever the part-file count. (A
+    ``part-*.jsonl`` path glob would expand to one path per file, and above
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` = 32 paths
+    Spark lists them in a parallel job of one task per file, on every
+    read.) In-flight ``.tmp-*`` files stay hidden: Spark skips names that
+    start with ``.``.
+
+    A collection that exists but holds no part files yet (a reader that
+    starts before the first commit) reads as an empty DataFrame when
+    ``schema`` is given; without one, Spark has nothing to infer from and
+    raises ``UNABLE_TO_INFER_SCHEMA``.
+    """
+    reader = spark.read.option("pathGlobFilter", "part-*.jsonl")
     if schema is not None:
         reader = reader.schema(schema)
-    return reader.json(f"{collection.path}/part-*.jsonl")
+    return reader.json(collection.path)
 
 
 def compact_collection(spark: SparkSession, collection: LocalCollection,

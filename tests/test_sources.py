@@ -50,6 +50,65 @@ def test_collection_readback(spark, sf_dir, nation, tmp_path):
     assert rows_of(got) == rows_of(nation)
 
 
+DOC_SCHEMA = "id LONG, v STRING"
+
+
+def _collection_with_parts(root, name: str, n_parts: int,
+                           docs_per_part: int = 5) -> LocalCollection:
+    """A collection of ``n_parts`` committed part files, plus one in-flight
+    ``.tmp-*`` file and one stray non-``part-`` file, each holding a valid
+    document that a correct read must not see."""
+    import json
+    import os
+    col = LocalCollection(str(root), name)
+    col.create()
+    for p in range(n_parts):
+        col.insert_many([json.dumps({"id": p * docs_per_part + i, "v": "x"})
+                         for i in range(docs_per_part)])
+    for stray in (".tmp-inflight", "stray.jsonl"):
+        with open(os.path.join(col.path, stray), "w") as f:
+            f.write('{"id": -1, "v": "stray"}\n')
+    return col
+
+
+def _jobs_for_read(spark, col: LocalCollection, group: str) -> tuple[int, int]:
+    """(rows, Spark jobs) of one read_collection + count under ``group``;
+    the read itself is inside the group, as file listing runs at read."""
+    from perfbench.tracing import group_counts, job_group
+    with job_group(spark, group):
+        n = read_collection(spark, col, schema=DOC_SCHEMA).count()
+    return n, group_counts(spark, group)[0]
+
+
+def test_read_collection_many_parts_no_listing_job(spark, tmp_path):
+    """40 part files (past Spark's 32-path parallel-listing threshold):
+    the count is exact, the in-flight and stray files are ignored, and the
+    read runs as many Spark jobs as a 4-part read — no per-read listing
+    job."""
+    from arangodb_java_parquet_spark.sources.readers import compact_collection
+    few = _collection_with_parts(tmp_path, "few", 4)
+    many = _collection_with_parts(tmp_path, "many", 40)
+    n_few, jobs_few = _jobs_for_read(spark, few, "read_collection_few")
+    n_many, jobs_many = _jobs_for_read(spark, many, "read_collection_many")
+    assert (n_few, n_many) == (20, 200)
+    assert jobs_many == jobs_few
+    out = str(tmp_path / "compacted")
+    compact_collection(spark, many, out, schema=DOC_SCHEMA, partitions=1)
+    got = sorted(r.id for r in read_parquet(spark, out).collect())
+    assert got == list(range(200))
+
+
+def test_read_collection_before_first_commit(spark, tmp_path):
+    """An existing collection with no part files yet: with a schema the
+    read is empty; without one there is nothing to infer from."""
+    from pyspark.errors import AnalysisException
+    col = LocalCollection(str(tmp_path), "empty")
+    col.create()
+    assert read_collection(spark, col, schema=DOC_SCHEMA).count() == 0
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        read_collection(spark, col)
+
+
 def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     """Partitioned lake write + partition-pruned read: the filter on the
     partition column appears as PartitionFilters and non-matching

@@ -33,6 +33,51 @@ def test_stream_load_to_collection(spark, sf_dir, tmp_path):
     assert col.count() == 30  # 25 nations + 5 regions, no re-ingest
 
 
+def test_stream_load_to_collection_continuous(spark, sf_dir, tmp_path):
+    """Continuous mode: two files dropped one after the other into a
+    running stream are each loaded exactly once, and the idle stream waits
+    on its processing-time trigger instead of re-listing back to back."""
+    import os
+    import time
+
+    import pyarrow.parquet as pq
+
+    nation = pq.read_table(f"{sf_dir}/nation.parquet")
+    halves = [nation.slice(0, 10), nation.slice(10)]
+    staging, src = tmp_path / "staging", tmp_path / "incoming"
+    os.makedirs(staging)
+    os.makedirs(src)
+    col = LocalCollection(str(tmp_path), "live_docs")
+    q = stream_load_to_collection(
+        spark, str(src), col,
+        schema=spark.read.parquet(f"{sf_dir}/nation.parquet").schema,
+        checkpoint_dir=str(tmp_path / "ckpt"), trigger_once=False)
+    try:
+        for k, half in enumerate(halves):
+            # write aside, then rename in: the stream never sees a
+            # half-written file
+            pq.write_table(half, staging / f"part{k}.parquet")
+            os.rename(staging / f"part{k}.parquet",
+                      src / f"part{k}.parquet")
+            q.processAllAvailable()
+            assert q.lastProgress["numInputRows"] == half.num_rows
+        keys = sorted(d["n_nationkey"] for d in col.read_all())
+        assert keys == list(range(25))
+        # idle between 100 ms triggers: most samples find the stream
+        # waiting, where the default trigger would be listing the directory
+        waiting = 0
+        for _ in range(20):
+            time.sleep(0.05)
+            status = q.status
+            waiting += (status["message"] == "Waiting for next trigger"
+                        and not status["isTriggerActive"])
+        assert waiting >= 10, q.status
+    finally:
+        q.stop()
+    assert q.exception() is None
+    assert col.count() == 25
+
+
 def test_windowed_event_counts_streaming_matches_batch(spark, sf_dir):
     from arangodb_java_parquet_spark.queries.common import t
     events = t(spark, sf_dir, "events")
