@@ -14,7 +14,9 @@ Two modes (SURVEY.md §1.3, §7 "hard parts"):
 * ``mode="reference"`` (fidelity path): an Arrow-batched ``mapInArrow``
   transform that reproduces the reference encoder's output for FULL nested
   schemas (struct / array / map, recursively — the reference serializer's
-  isRecord/isArray/isMap dispatch at GenericRecordJsonEncoder.java:54-108):
+  isRecord/isArray/isMap dispatch at GenericRecordJsonEncoder.java:54-108).
+  One recursive Arrow encoder serves flat and nested rows alike: a row is
+  encoded as a struct of its columns.
     - output field order = schema field order, ``"name": value`` pairs joined
       with ``", "`` (GenericRecordJsonEncoder.java:60-71)
     - arrays as ``[e1, e2]`` (GenericRecordJsonEncoder.java:73-89)
@@ -50,11 +52,12 @@ Two modes (SURVEY.md §1.3, §7 "hard parts"):
     - circular references (GenericRecordJsonEncoder.java:55-58) cannot occur
       in Spark data — the guard has no Spark analog.
 
-The fidelity path is Python (slow path by design, opt-in); the default path
-stays entirely JVM-side. Null-vs-NaN exactness: the fidelity path consumes
-Arrow record batches directly (``to_pylist`` honors the validity bitmap), so
-SQL NULL -> ``null`` and NaN -> ``"NaN"`` at every nesting depth with no
-pandas conflation.
+The fidelity path runs in a Python worker (opt-in); the default path stays
+entirely JVM-side. Inside the worker, Arrow C++ kernels encode whole
+columns and Python formats only the exceptional values (escaped strings,
+out-of-band or non-finite floats, binary). Null-vs-NaN exactness: the
+fidelity path reads Arrow validity bitmaps at every depth, so SQL NULL ->
+``null`` and NaN -> ``"NaN"`` with no pandas conflation.
 """
 
 from __future__ import annotations
@@ -63,7 +66,6 @@ import math
 from decimal import Decimal
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -151,7 +153,7 @@ def _convert_nested(col: Column, dtype, converters: dict) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# fidelity path: exact reference-encoder semantics (nested schemas)
+# fidelity path: exact reference-encoder semantics
 # ---------------------------------------------------------------------------
 
 _ESCAPES = {'"': '\\"', "\\": "\\\\", "\b": "\\b", "\f": "\\f",
@@ -216,33 +218,20 @@ def _java_float32_str(f: float) -> str:
 
 
 def _encode_scalar(v, kind: str) -> str:
+    """Per-value formatter for what the Arrow kernels leave to Python:
+    binary values and floats outside Java's plain-decimal band."""
     if v is None:
         return "null"
-    if kind == "string":
-        return '"%s"' % _escape_string(v)
     if kind == "bytes":
         # {"bytes": "<ISO-8859-1-decoded>"} wrapper
         # (GenericRecordJsonEncoder.java:113-117,174-176)
         return '{"bytes": "%s"}' % _escape_string(bytes(v).decode("ISO-8859-1"))
-    if kind == "bool":
-        return "true" if v else "false"
-    if kind in ("float", "float32"):
-        f = float(v)
-        if math.isnan(f):
-            return '"NaN"'  # quoted (GenericRecordJsonEncoder.java:118-124)
-        if math.isinf(f):
-            return '"Infinity"' if f > 0 else '"-Infinity"'
-        return _java_float32_str(f) if kind == "float32" else _java_double_str(f)
-    if kind == "timestamp":  # raw epoch micros fall-through (§1.3)
-        ts = pd.Timestamp(v)
-        if ts.tzinfo is not None:
-            ts = ts.tz_convert("UTC").tz_localize(None)
-        return str(ts.value // 1000)
-    if kind == "date":  # raw epoch days fall-through (§1.3)
-        return str((pd.Timestamp(v) - pd.Timestamp("1970-01-01")).days)
-    # int/long fall-through (GenericRecordJsonEncoder.java:133-137); int(v)
-    # tolerates numeric widenings from intermediate frames.
-    return str(int(v))
+    f = float(v)
+    if math.isnan(f):
+        return '"NaN"'  # quoted (GenericRecordJsonEncoder.java:118-124)
+    if math.isinf(f):
+        return '"Infinity"' if f > 0 else '"-Infinity"'
+    return _java_float32_str(f) if kind == "float32" else _java_double_str(f)
 
 
 def _kind_of(dt: T.DataType) -> str:
@@ -267,30 +256,6 @@ def _kind_of(dt: T.DataType) -> str:
         "(register a type converter to pre-map it, or use mode='spark')")
 
 
-def _encode_value(v, dt: T.DataType) -> str:
-    """Recursive serializer — the Spark analog of the reference's
-    isRecord/isArray/isMap dispatch (GenericRecordJsonEncoder.java:53-108)."""
-    if v is None:
-        return "null"
-    if isinstance(dt, T.StructType):
-        # field order = schema order (GenericRecordJsonEncoder.java:60-71)
-        return "{%s}" % ", ".join(
-            '"%s": %s' % (_escape_string(f.name),
-                          _encode_value(v.get(f.name), f.dataType))
-            for f in dt.fields)
-    if isinstance(dt, T.ArrayType):
-        return "[%s]" % ", ".join(
-            _encode_value(e, dt.elementType) for e in v)
-    if isinstance(dt, T.MapType):
-        # keys serialized like values (GenericRecordJsonEncoder.java:100-103)
-        items = v.items() if isinstance(v, dict) else v
-        return "{%s}" % ", ".join(
-            "%s: %s" % (_encode_value(k, dt.keyType),
-                        _encode_value(val, dt.valueType))
-            for k, val in items)
-    return _encode_scalar(v, _kind_of(dt))
-
-
 # Characters whose presence forces the python escape fallback for a string
 # value: the named escapes plus the three \uXXXX control ranges
 # (GenericRecordJsonEncoder.java:178-216).
@@ -313,24 +278,66 @@ def _patch(out, mask, replacements):
                                 pa.array(replacements, pa.string()))
 
 
-def _vec_column_strs(arr, dtype):
-    """Serialized strings for one SCALAR column of an Arrow batch, no
-    nulls in the output (SQL NULL -> the 4-char string ``null``).
-
-    Vectorization strategy: the overwhelmingly common cases run as Arrow
-    C++ kernels (integer casts, bool if_else, quote-wrapping for strings
-    with no escapable characters, numpy shortest-repr for floats inside
-    Java's plain-decimal band); only the EXCEPTIONAL values — strings
-    containing escapes, non-finite or out-of-band floats, binary — drop
-    to the per-value python formatter, patched back in with
-    ``replace_with_mask``. Output is byte-identical to the row-at-a-time
-    reference formatter (property-pinned in
-    tests/test_encoder_properties.py); the ~14× throughput gap of the
-    all-python loop closes because python now touches O(exceptional)
-    values, not O(rows)."""
+def _join_lists(arr, items, open_: str, close: str):
+    """``<open_>item, item<close>`` per row of list array ``arr``, given
+    the encoded strings of its flattened ``items``. The rebuilt list keeps
+    ``arr``'s null mask, or a null list would join to an empty one."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
+    lengths = pc.fill_null(pc.list_value_length(arr), 0).to_numpy()
+    offsets = pa.array(np.concatenate([[0], np.cumsum(lengths)]), pa.int32())
+    lists = pa.ListArray.from_arrays(offsets, items, mask=pc.is_null(arr))
+    return pc.fill_null(pc.binary_join_element_wise(
+        pa.scalar(open_), pc.binary_join(lists, ", "), pa.scalar(close),
+        pa.scalar("")), "null")
+
+
+def _vec_column_strs(arr, dtype):
+    """Serialized strings for one Arrow array of Spark type ``dtype``, no
+    nulls in the output (SQL NULL -> the 4-char string ``null``).
+
+    Recursive over struct / array / map (the reference serializer's
+    isRecord/isArray/isMap dispatch, GenericRecordJsonEncoder.java:53-108):
+    a container encodes its children as whole arrays, then joins their
+    strings with Arrow string kernels. A row is a struct of its columns.
+
+    Scalars: the overwhelmingly common cases run as Arrow C++ kernels
+    (integer casts, bool if_else, quote-wrapping for strings with no
+    escapable characters, numpy shortest-repr for floats inside Java's
+    plain-decimal band); only the EXCEPTIONAL values — strings containing
+    escapes, non-finite or out-of-band floats, binary — drop to the
+    per-value python formatter, patched back in with ``replace_with_mask``.
+    Python therefore touches O(exceptional) values, not O(rows), at any
+    nesting depth."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(dtype, T.StructType):
+        # field order = schema order (GenericRecordJsonEncoder.java:60-71)
+        pieces = [pa.scalar("{")]
+        for i, f in enumerate(dtype.fields):
+            sep = '"%s": ' if i == 0 else ', "%s": '
+            pieces += [pa.scalar(sep % _escape_string(f.name)),
+                       _vec_column_strs(arr.field(i), f.dataType)]
+        docs = pc.binary_join_element_wise(*pieces, pa.scalar("}"),
+                                           pa.scalar(""))
+        return pc.if_else(pc.is_null(arr), pa.scalar("null"), docs)
+    if isinstance(dtype, T.ArrayType):
+        items = _vec_column_strs(arr.flatten(), dtype.elementType)
+        return _join_lists(arr, items, "[", "]")
+    if isinstance(dtype, T.MapType):
+        # keys serialized like values (GenericRecordJsonEncoder.java:100-103);
+        # list_flatten has no map kernel, so flatten the entries through a
+        # list<struct<key, value>> view of the same buffers
+        t = arr.type
+        arr = arr.view(pa.list_(pa.struct([t.key_field, t.item_field])))
+        entries = arr.flatten()
+        items = pc.binary_join_element_wise(
+            _vec_column_strs(entries.field(0), dtype.keyType),
+            _vec_column_strs(entries.field(1), dtype.valueType), ": ")
+        return _join_lists(arr, items, "{", "}")
 
     kind = _kind_of(dtype)
     if kind == "int":
@@ -345,9 +352,9 @@ def _vec_column_strs(arr, dtype):
         unit = arr.type.unit
         ints = pc.cast(arr, pa.int64(), safe=False)
         if unit == "ns":
-            # FLOOR division to match the row path's `value // 1000`:
-            # pc.divide truncates toward zero, which would round pre-epoch
-            # timestamps with sub-microsecond residue the other way.
+            # FLOOR division to epoch microseconds: pc.divide truncates
+            # toward zero, which would round pre-epoch timestamps with
+            # sub-microsecond residue the other way.
             thousand = pa.scalar(1000, pa.int64())
             q = pc.divide(ints, thousand)
             r = pc.subtract(ints, pc.multiply(q, thousand))
@@ -386,7 +393,7 @@ def _vec_column_strs(arr, dtype):
                     for i in np.nonzero(fallback)[0]]
             out = _patch(out, pa.array(fallback), reps)
         return out
-    # bytes (and anything else scalar): per-value python for this column
+    # bytes: per-value python for this column
     return pa.array([_encode_scalar(v, kind) for v in arr.to_pylist()],
                     pa.string())
 
@@ -394,37 +401,12 @@ def _vec_column_strs(arr, dtype):
 def _encode_reference_fidelity(df: DataFrame) -> DataFrame:
     from arangodb_java_parquet_spark.shipping import ensure_package_shipped
     ensure_package_shipped(df.sparkSession)
-    fields = [(f.name, f.dataType) for f in df.schema.fields]
-    flat = all(not isinstance(dt, (T.StructType, T.ArrayType, T.MapType))
-               for _, dt in fields)
+    row_type = df.schema
 
     def encode_batches(it: Iterator) -> Iterator:
         import pyarrow as pa
-        import pyarrow.compute as pc
         for batch in it:
-            if flat and batch.num_rows:
-                # vectorized assembly: per-column serialized strings plus
-                # literal '{"name": '/', "name": ' separators, concatenated
-                # row-wise entirely inside Arrow C++
-                pieces = []
-                for i, (name, dtype) in enumerate(fields):
-                    lead = ("{" if i == 0 else ", ") + \
-                        '"%s": ' % _escape_string(name)
-                    pieces.append(pa.scalar(lead))
-                    pieces.append(_vec_column_strs(batch.column(i), dtype))
-                docs = pc.binary_join_element_wise(
-                    *pieces, pa.scalar("}"), pa.scalar(""))
-                yield pa.RecordBatch.from_arrays([docs], [DOC_COL])
-                continue
-            docs = []
-            # nested schemas keep the recursive row path: to_pylist honors
-            # Arrow validity bitmaps (SQL NULL -> None, NaN -> nan at any
-            # depth), so no null-masking is needed.
-            for row in batch.to_pylist():
-                parts = ['"%s": %s' % (_escape_string(name),
-                                       _encode_value(row[name], dtype))
-                         for name, dtype in fields]
-                docs.append("{%s}" % ", ".join(parts))
-            yield pa.RecordBatch.from_pydict({DOC_COL: docs})
+            docs = _vec_column_strs(batch.to_struct_array(), row_type)
+            yield pa.RecordBatch.from_arrays([docs], [DOC_COL])
 
     return df.mapInArrow(encode_batches, schema=f"{DOC_COL} string")

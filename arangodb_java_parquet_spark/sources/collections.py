@@ -22,11 +22,16 @@ Both are picklable so they can travel into ``foreachPartition`` closures.
 
 from __future__ import annotations
 
+import fnmatch
 import json
 import os
 import shutil
 import uuid
 from collections.abc import Iterable, Iterator
+
+# Part-file names of a LocalCollection (``<root>/<name>/part-<uuid>.jsonl``);
+# ``readers.read_collection`` filters its Spark read on the same pattern.
+PART_GLOB = "part-*.jsonl"
 
 
 class Collection:
@@ -106,7 +111,7 @@ class LocalCollection(Collection):
         return sorted(
             os.path.join(self.path, p)
             for p in os.listdir(self.path)
-            if p.startswith("part-") and p.endswith(".jsonl")
+            if fnmatch.fnmatchcase(p, PART_GLOB)
         )
 
     def count(self) -> int:

@@ -11,7 +11,7 @@ Spark re-expression (SURVEY.md §2.1 #1,2,6,7):
                    column-pruned — strictly more general than the reference's
                    single-file row loop at ParquetArangoLoader.java:139-150)
   * encode      -> Column-expression ``to_json`` fast path or reference-fidelity
-                   pandas-UDF path (functions/docjson.py)
+                   ``mapInArrow`` path (functions/docjson.py)
   * batch+sink  -> ``foreachPartition``: each task batches its iterator into
                    ``batch_size`` chunks and calls ``collection.insert_many``.
                    Task parallelism IS the async model: N parallel partition

@@ -25,7 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arangodb_java_parquet_spark.sources.collections import LocalCollection
+from arangodb_java_parquet_spark.sources.collections import (
+    PART_GLOB, LocalCollection)
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -118,9 +119,10 @@ def read_collection(spark: SparkSession, collection: LocalCollection, *,
     JSONL part files — the document store's dynamic-schema model).
 
     The read is rooted at the collection directory and picks part files
-    with ``pathGlobFilter``, so Spark lists the collection with ONE call on
-    the driver and starts no listing job, whatever the part-file count. (A
-    ``part-*.jsonl`` path glob would expand to one path per file, and above
+    with ``pathGlobFilter`` on ``PART_GLOB``, so Spark lists the collection
+    with ONE call on the driver and starts no listing job, whatever the
+    part-file count. (A ``<collection>/part-*.jsonl`` path glob would
+    expand to one path per file, and above
     ``spark.sql.sources.parallelPartitionDiscovery.threshold`` = 32 paths
     Spark lists them in a parallel job of one task per file, on every
     read.) In-flight ``.tmp-*`` files stay hidden: Spark skips names that
@@ -131,7 +133,7 @@ def read_collection(spark: SparkSession, collection: LocalCollection, *,
     ``schema`` is given; without one, Spark has nothing to infer from and
     raises ``UNABLE_TO_INFER_SCHEMA``.
     """
-    reader = spark.read.option("pathGlobFilter", "part-*.jsonl")
+    reader = spark.read.option("pathGlobFilter", PART_GLOB)
     if schema is not None:
         reader = reader.schema(schema)
     return reader.json(collection.path)

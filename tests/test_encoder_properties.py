@@ -6,11 +6,21 @@ round-trips the values under the documented reference semantics
 import json
 import math
 
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from arangodb_java_parquet_spark.functions.docjson import (
-    _encode_scalar, _escape_string)
+    _encode_scalar, _escape_string, _vec_column_strs)
+
+
+def _encode_one(v, dt):
+    """One value of Spark type ``dt`` through the recursive Arrow encoder
+    (the encoder the reference mode runs on every batch)."""
+    return _vec_column_strs(pa.array([v], to_arrow_type(dt)),
+                            dt).to_pylist()[0]
+
 
 # pure-python property tests for the per-value encoder (fast path for
 # hypothesis: no Spark job per example)
@@ -83,7 +93,7 @@ def test_java_double_tostring_notation():
 @given(st.integers(min_value=-2**63, max_value=2**63 - 1))
 @settings(max_examples=200, deadline=None)
 def test_int_encoding(i):
-    assert json.loads(_encode_scalar(i, "int")) == i
+    assert json.loads(_encode_one(i, T.LongType())) == i
 
 
 @given(st.text(max_size=30))
@@ -100,7 +110,6 @@ def test_nested_struct_array_map_encoding():
     """Recursive fidelity semantics (GenericRecordJsonEncoder.java:54-108):
     schema-ordered structs, ", "-joined arrays, maps with keys serialized
     like values, bytes wrapper and NaN quoting at depth."""
-    from arangodb_java_parquet_spark.functions.docjson import _encode_value
     dt = T.StructType([
         T.StructField("name", T.StringType()),
         T.StructField("scores", T.ArrayType(T.DoubleType())),
@@ -113,16 +122,16 @@ def test_nested_struct_array_map_encoding():
     v = {"name": 'a"b', "scores": [1.5, None, float("nan")],
          "attrs": [("k1", 7), ("k2", None)], "raw": b"\x9f",
          "inner": {"x": None, "y": "z"}}
-    out = _encode_value(v, dt)
+    out = _encode_one(v, dt)
     assert out == (
         '{"name": "a\\"b", "scores": [1.5, null, "NaN"], '
         '"attrs": {"k1": 7, "k2": null}, '
         '"raw": {"bytes": "\\u009F"}, '
         '"inner": {"x": null, "y": "z"}}')
     # null struct / null array / null map at depth
-    assert _encode_value(None, dt) == "null"
-    assert _encode_value({"name": None, "scores": None, "attrs": None,
-                          "raw": None, "inner": None}, dt) == \
+    assert _encode_one(None, dt) == "null"
+    assert _encode_one({"name": None, "scores": None, "attrs": None,
+                        "raw": None, "inner": None}, dt) == \
         ('{"name": null, "scores": null, "attrs": null, "raw": null, '
          '"inner": null}')
 
@@ -156,6 +165,68 @@ def test_spark_encode_nested_rows(spark):
     assert list(parsed.keys()) == ["id", "vec", "meta", "tags"]
     assert list(parsed["meta"].keys()) == ["lang", "score"]
     assert parsed["tags"] == {"a": "b"}
+
+
+def test_spark_encode_nested_across_arrow_batches(spark):
+    """Nested rows through encode_documents(mode="reference") with three
+    records per Arrow batch, so every task encodes several batches (and
+    the last one short). Null structs, null/empty/NaN float arrays, empty
+    and null maps, binary and U+2003 must encode exactly as the literal
+    reference documents below."""
+    from arangodb_java_parquet_spark.functions.docjson import (
+        encode_documents)
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("meta", T.StructType([
+            T.StructField("src", T.StringType()),
+            T.StructField("rank", T.IntegerType())])),
+        T.StructField("emb", T.ArrayType(T.FloatType())),
+        T.StructField("tags", T.MapType(T.StringType(), T.LongType())),
+        T.StructField("blob", T.BinaryType()),
+        T.StructField("title", T.StringType()),
+    ])
+    nan = float("nan")
+    rows = [
+        (1, ("a", 1), [0.5, nan, -1.25], {"k": 1}, b"\x00\xff",
+         "em\u2003space"),
+        (2, None, None, None, None, None),
+        (3, ("b", None), [], {}, b"", "plain"),
+        (4, None, [None, 2.0], {"x": None}, b"\x7f", "tab\there"),
+        (5, ("c\u2003", 5), [nan], None, None, "\u2003"),
+        (6, ("d", 6), None, {}, b"\x9f\x20", ""),
+        (7, None, [], {"y": 7, "z": 8}, None, 'q"uote'),
+        (8, ("e", 8), [3.4028235e38, 1e-4], None, b"abc", None),
+    ]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        df = spark.createDataFrame(rows, schema).repartition(2, "id")
+        assert df.rdd.glom().map(len).collect() == [4, 4]
+        docs = sorted(r[0] for r in
+                      encode_documents(df, mode="reference").collect())
+    finally:
+        spark.conf.set(key, before)
+    assert docs == [
+        '{"id": 1, "meta": {"src": "a", "rank": 1}, '
+        '"emb": [0.5, "NaN", -1.25], "tags": {"k": 1}, '
+        '"blob": {"bytes": "\\u0000\xff"}, "title": "em\\u2003space"}',
+        '{"id": 2, "meta": null, "emb": null, "tags": null, "blob": null, '
+        '"title": null}',
+        '{"id": 3, "meta": {"src": "b", "rank": null}, "emb": [], '
+        '"tags": {}, "blob": {"bytes": ""}, "title": "plain"}',
+        '{"id": 4, "meta": null, "emb": [null, 2.0], "tags": {"x": null}, '
+        '"blob": {"bytes": "\\u007F"}, "title": "tab\\there"}',
+        '{"id": 5, "meta": {"src": "c\\u2003", "rank": 5}, '
+        '"emb": ["NaN"], "tags": null, "blob": null, "title": "\\u2003"}',
+        '{"id": 6, "meta": {"src": "d", "rank": 6}, "emb": null, '
+        '"tags": {}, "blob": {"bytes": "\\u009F "}, "title": ""}',
+        '{"id": 7, "meta": null, "emb": [], "tags": {"y": 7, "z": 8}, '
+        '"blob": null, "title": "q\\"uote"}',
+        '{"id": 8, "meta": {"src": "e", "rank": 8}, '
+        '"emb": [3.4028235E38, 1.0E-4], "tags": null, '
+        '"blob": {"bytes": "abc"}, "title": null}',
+    ]
 
 
 def test_spark_encode_float32_column(spark):
@@ -198,18 +269,18 @@ def test_map_nonstring_keys_serialized_like_values():
     serializer as values (GenericRecordJsonEncoder.java:90-108: serialize(
     entry.getKey()) with no string-coercion) — so a long-keyed map emits
     unquoted numeric keys and a double-keyed map emits "NaN"-quoted keys,
-    faithfully reproducing the reference's non-standard JSON."""
-    from arangodb_java_parquet_spark.functions.docjson import _encode_value
+    faithfully reproducing the reference's non-standard JSON. (Arrow and
+    Spark both reject null map keys, so a null shows up as a value.)"""
     long_map = T.MapType(T.LongType(), T.StringType())
-    assert _encode_value([(7, "a"), (None, "b")], long_map) == \
-        '{7: "a", null: "b"}'
+    assert _encode_one([(7, "a"), (8, None)], long_map) == \
+        '{7: "a", 8: null}'
     dbl_map = T.MapType(T.DoubleType(), T.LongType())
-    assert _encode_value([(float("nan"), 1), (2.5, None)], dbl_map) == \
+    assert _encode_one([(float("nan"), 1), (2.5, None)], dbl_map) == \
         '{"NaN": 1, 2.5: null}'
     # struct-keyed map: keys recurse like any value
     skey = T.MapType(
         T.StructType([T.StructField("k", T.LongType())]), T.LongType())
-    assert _encode_value([({"k": 3}, 9)], skey) == '{{"k": 3}: 9}'
+    assert _encode_one([({"k": 3}, 9)], skey) == '{{"k": 3}: 9}'
 
 
 def test_deeply_nested_bytes_and_nan():
@@ -217,7 +288,6 @@ def test_deeply_nested_bytes_and_nan():
     must survive arbitrary nesting depth (the reference dispatches per
     element recursively: GenericRecordJsonEncoder.java:72-108,113-118,
     174-176), including inside map VALUES and map KEYS."""
-    from arangodb_java_parquet_spark.functions.docjson import _encode_value
     dt = T.ArrayType(T.MapType(
         T.StringType(),
         T.StructType([
@@ -225,12 +295,12 @@ def test_deeply_nested_bytes_and_nan():
             T.StructField("scores", T.ArrayType(T.DoubleType()))])))
     v = [[("a", {"payload": b"\x00\xff", "scores": [float("-inf"), 1.0]})],
          [("b", None)]]
-    assert _encode_value(v, dt) == (
+    assert _encode_one(v, dt) == (
         '[{"a": {"payload": {"bytes": "\\u0000\u00ff"}, '
         '"scores": ["-Infinity", 1.0]}}, {"b": null}]')
     # binary as a map KEY gets the same wrapper treatment
     bkey = T.MapType(T.BinaryType(), T.LongType())
-    assert _encode_value([(b"\x01", 5)], bkey) == \
+    assert _encode_one([(b"\x01", 5)], bkey) == \
         '{{"bytes": "\\u0001"}: 5}'
 
 
@@ -242,8 +312,8 @@ def test_deeply_nested_bytes_and_nan():
 @settings(max_examples=120, deadline=None)
 def test_recursive_array_nesting_never_crashes(v):
     """Any depth of array nesting over any scalar leaf must encode without
-    raising, and encode null-for-None at every level."""
-    from arangodb_java_parquet_spark.functions.docjson import _encode_value
+    raising, and encode null-for-None at every level: byte for byte what a
+    per-value recursive loop over the same value produces."""
 
     def dtype_for(x):
         if isinstance(x, list):
@@ -271,9 +341,24 @@ def test_recursive_array_nesting_never_crashes(v):
               T.BinaryType: bytes, T.StringType: str}[type(dt)]
         return x if isinstance(x, ok) and not isinstance(x, bool) else None
 
+    def reference(x, dt):
+        if x is None:
+            return "null"
+        if isinstance(dt, T.ArrayType):
+            return "[%s]" % ", ".join(reference(e, dt.elementType)
+                                      for e in x)
+        if isinstance(dt, T.StringType):
+            return '"%s"' % _escape_string(x)
+        if isinstance(dt, T.LongType):
+            return str(x)
+        return _encode_scalar(
+            x, "bytes" if isinstance(dt, T.BinaryType) else "float32")
+
     dt = dtype_for(v)
-    out = _encode_value(conform(v, dt), dt)
+    x = conform(v, dt)
+    out = _encode_one(x, dt)
     assert isinstance(out, str) and out
+    assert out == reference(x, dt)
 
 
 def test_converters_top_level_only_reference_parity(spark):
@@ -344,9 +429,9 @@ def test_converters_exact_complex_match_beats_recursion(spark):
 
 def test_vectorized_ns_timestamp_floor_division_matches_row_path():
     """pc.divide truncates toward zero; the vectorized ns->us path must
-    FLOOR like the row path's `pd.Timestamp.value // 1000`, or pre-epoch
-    timestamps with sub-microsecond residue serialize differently on the
-    flat fast path vs the nested/row path (round-6 ADVICE)."""
+    FLOOR like python's `value // 1000` (epoch microseconds round down),
+    or pre-epoch timestamps with sub-microsecond residue serialize one
+    microsecond late."""
     import pyarrow as pa
     from pyspark.sql import types as T
 

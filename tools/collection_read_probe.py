@@ -40,7 +40,8 @@ os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
 from pyspark.sql import functions as F
 
 from arangodb_java_parquet_spark.session import get_spark
-from arangodb_java_parquet_spark.sources.collections import LocalCollection
+from arangodb_java_parquet_spark.sources.collections import (
+    PART_GLOB, LocalCollection)
 from arangodb_java_parquet_spark.sources.loader import ParquetLoader
 from arangodb_java_parquet_spark.sources.readers import read_collection
 from perfbench.datagen import write_arrivals
@@ -104,7 +105,7 @@ def main() -> None:
                 f"dir-{size}", args.repeats)
             g_cpu, g_jobs, g_rows = _measure(
                 spark, lambda: spark.read.schema(DOC_SCHEMA).json(
-                    f"{col.path}/part-*.jsonl"),
+                    os.path.join(col.path, PART_GLOB)),
                 f"glob-{size}", args.repeats)
             if d_rows != expected or g_rows != expected:
                 raise SystemExit(f"read {d_rows}/{g_rows} rows, "
